@@ -4,6 +4,8 @@ import graft.forecast.{Forecaster, StructuralTS}
 import graft.queries.cacheOnce
 import graft.stats.Diagnostics
 import graft.ts.{Aggregations, TimeOps}
+import graft.ts.Aggregations.SeriesStats
+import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
@@ -21,7 +23,10 @@ import org.apache.spark.sql.types.{StringType, TimestampType}
   *
   * Stage map (reference op → here):
   *   P1 extract          → [[extractSeries]] (dotted path on nested struct)
-  *   T1/T2/T3 + A1 + A5  → `Aggregations.groupByTime` + driver-side counts
+  *   T1/T2/T3 + A1       → `Aggregations.groupByTime`, one history per side
+  *   A2-A5               → `Aggregations.seriesStats`: one aggregate job
+  *                         over both sides, collected to the driver: date
+  *                         bounds, horizons and logistic floor/cap per series
   *   C3 + C6             → `Forecaster.forecast/futureGrid` on covariates
   *   J1 + J2             → observed-splice left join + coalesce
   *   J3 / J4             → covariate alignment joins (broadcast)
@@ -37,7 +42,7 @@ object AnalyzePipeline {
       targetForecasts: DataFrame,    // (series, ds, segment, 13-col frame)
       diagnostics: DataFrame,        // (series, side, lag, acf, pacf)
       regressorCoefficients: DataFrame, // (series, regressor_mode, center, coef bounds)
-      bounds: DataFrame,             // (series, side, min_ds, max_ds, n)
+      bounds: Map[(String, String), (Timestamp, Timestamp)], // (id, side) -> (min ds, max ds)
       fitBounds: Map[String, (Double, Double)] = Map.empty, // id -> resolved (floor, cap)
       horizons: Map[String, (Int, Int)] = Map.empty, // id -> honored (from, to) horizons
       granger: Option[DataFrame] = None, // C9 per-lag F-tests for type=granger correlations
@@ -80,89 +85,34 @@ object AnalyzePipeline {
   def analyze(documents: Map[String, DataFrame],
               correlations: Seq[CorrelationSpec]): AnalyzeResult = {
     require(correlations.nonEmpty, "no correlations requested")
-    val spark = documents.values.head.sparkSession
+    val covHist = history(documents, correlations, "from")
+    val tgtHist = history(documents, correlations, "to")
+    val sides = covHist.withColumn("side", lit("from"))
+      .unionByName(tgtHist.withColumn("side", lit("to")))
+    val stats = statsOf(sides)
 
-    def histories(side: CorrelationSpec => (String, String)): DataFrame =
-      correlations.map { c =>
-        val (docName, path) = side(c)
-        val doc = documents.getOrElse(docName,
-          throw new IllegalArgumentException(s"unknown document: $docName"))
-        Aggregations.groupByTime(
-            extractSeries(doc, c.dateColumn, path), c.grain.map(TimeOps.normalizeGrain),
-            c.aggregation)
-          .select(lit(c.id).as("series"), col("ds"), col("y"))
-      }.reduce(_ unionByName _)
-
-    val covHist = cacheOnce(histories(c => (c.fromData, c.fromIndex)))
-    val tgtHist = cacheOnce(histories(c => (c.toData, c.toIndex)))
-
-    // A5: horizon defaults to EACH side's post-aggregation length
-    // (`prepare_dataset` is called per side, `app.py:115-120/158-163`,
-    // so the covariate grid runs len(cov) periods and the target grid
-    // len(target) periods); per-series counts are a handful of scalars —
-    // and the jobs are SKIPPED entirely when every correlation
-    // specifies unitsToForecast (the common case)
-    def seriesCounts(hist: DataFrame): Map[String, Int] =
-      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty
-      else hist.groupBy("series").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-    val covCounts = seriesCounts(covHist)
-    val tgtCounts = seriesCounts(tgtHist)
-    val covHorizons: Map[String, Int] =
-      correlations.map(c => c.id -> c.unitsToForecast.getOrElse(covCounts.getOrElse(c.id, 1)))
-        .toMap
-    val tgtHorizons: Map[String, Int] =
-      correlations.map(c => c.id -> c.unitsToForecast.getOrElse(tgtCounts.getOrElse(c.id, 1)))
-        .toMap
-
-    // resolved logistic bounds (A3/A4): the reference computes
-    // floor/ceiling only for logistic growth (`app.py:354-364`), each
-    // side from ITS OWN series (the bundle's self floor/ceiling,
-    // app.py:503-538); for all-linear requests the stats jobs are
-    // skipped (cap/floor are unused by the linear trend)
-    def capStatsOf(hist: DataFrame, anyLogistic: Boolean): Map[String, (Double, Double, Double)] =
-      if (!anyLogistic) Map.empty
-      else hist.groupBy("series")
-        .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
-        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    val capStats = capStatsOf(tgtHist, correlations.exists(_.growth == "logistic"))
-    val covCapStats = capStatsOf(covHist,
-      correlations.exists(_.covOptions.exists(_.growth == "logistic")))
-    def resolve(stats: Map[String, (Double, Double, Double)], id: String,
-                userFloor: Double, userCeiling: Option[Double]): (Double, Double) = {
-      val (mx, sd, mn) = stats.getOrElse(id, (1.0, 0.0, 0.0))
-      (math.min(userFloor, mn),
-       math.max(userCeiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx))
-    }
-    val specOverrides: Map[String, StructuralTS.FitSpec] = correlations.map { c =>
-      val (floor, cap) = resolve(capStats, c.id, c.floor, c.ceiling)
-      c.id -> c.fitSpec(floor, cap)
-    }.toMap
+    // A5: each side's grid runs ITS OWN post-aggregation length
+    // (`prepare_dataset` is called per side, `app.py:115-120/158-163`)
+    val covHorizons = horizonsOf(correlations, stats, "from")
+    val tgtHorizons = horizonsOf(correlations, stats, "to")
+    val specOverrides = targetSpecs(correlations, stats)
     // §3.2 covariate-side options (ForecastingOptions.fromIndex) when
-    // present; otherwise the covariate fits with the correlation's spec
-    // (the /analyze behavior: one changepoint prior for both fits)
+    // present, resolved against the covariate's own series (the bundle's
+    // self floor/ceiling, app.py:503-538); otherwise the covariate fits
+    // with the correlation's spec (the /analyze behavior: one changepoint
+    // prior for both fits)
     val covSpecOverrides: Map[String, StructuralTS.FitSpec] = correlations.map { c =>
       c.id -> c.covOptions.map { o =>
-        val (floor, cap) = resolve(covCapStats, c.id, o.floor, o.ceiling)
-        o.fitSpec(floor, cap)
+        val s = stats((c.id, "from"))
+        o.fitSpec(s.floor(o.floor), s.cap(o.ceiling))
       }.getOrElse(specOverrides(c.id))
     }.toMap
     val defaultSpec = specOverrides(correlations.head.id)
-    val defaultCovSpec = covSpecOverrides(correlations.head.id)
-
-    // grains can differ per correlation; one grid per distinct grain
-    val grainOf: Map[String, String] =
-      correlations.map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
-    def gridFor(hist: DataFrame, horizons: Map[String, Int]): DataFrame =
-      grainOf.values.toSeq.distinct.map { g =>
-        val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
-        Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
-                              horizon = 1, horizonOverrides = horizons)
-      }.reduce(_ unionByName _)
 
     // C3: covariate forecasts over history + future (covariate-side spec)
-    val covForecast = Forecaster.forecast(covHist, gridFor(covHist, covHorizons),
-                                          defaultCovSpec, "series", covSpecOverrides)
+    val covForecast = Forecaster.forecast(covHist, gridFor(correlations, covHist, covHorizons),
+                                          covSpecOverrides(correlations.head.id), "series",
+                                          covSpecOverrides)
 
     // J1+J2: observed covariate wins, forecast fills the future
     val covSpliced = cacheOnce(covForecast
@@ -176,7 +126,8 @@ object AnalyzePipeline {
       .withColumn("x", coalesce(col("x"), lit(0.0)))
     // J4-as-inner also reproduces the reference's dropna: target-future
     // dates beyond the covariate's forecast coverage are dropped
-    val tgtFuture = gridFor(tgtHist, tgtHorizons).join(covX, Seq("series", "ds"), "inner")
+    val tgtFuture = gridFor(correlations, tgtHist, tgtHorizons)
+      .join(covX, Seq("series", "ds"), "inner")
 
     // C4/C8: target forecast with the covariate as regressor
     val tgtForecast = Forecaster.forecast(tgtHistX, tgtFuture,
@@ -214,22 +165,14 @@ object AnalyzePipeline {
     val uniIds = correlations.filter(_.corrType == "univariateStatistics").map(_.id)
     val univariate: Option[DataFrame] =
       if (uniIds.isEmpty) None
-      else Some(covHist.withColumn("side", lit("from"))
-        .unionByName(tgtHist.withColumn("side", lit("to")))
-        .filter(col("series").isin(uniIds: _*))
+      else Some(sides.filter(col("series").isin(uniIds: _*))
         .groupBy("series", "side")
         .agg(count(lit(1)).as("n"), avg("y").as("mean"),
              stddev_samp("y").as("std"), min("y").as("min"), max("y").as("max"),
              skewness(col("y")).as("skewness"), kurtosis(col("y")).as("kurtosis")))
 
-    // A2 date bounds per series/side
-    val bounds = covHist.withColumn("side", lit("from"))
-      .unionByName(tgtHist.withColumn("side", lit("to")))
-      .groupBy("series", "side")
-      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
-
-    AnalyzeResult(covSpliced, tgtForecast, diag, coefs, bounds,
-                  specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
+    AnalyzeResult(covSpliced, tgtForecast, diag, coefs, boundsOf(stats),
+                  fitBoundsOf(specOverrides),
                   correlations.map(c =>
                     c.id -> (covHorizons(c.id), tgtHorizons(c.id))).toMap,
                   granger = granger, univariate = univariate,
@@ -245,54 +188,70 @@ object AnalyzePipeline {
   def analyzeSingle(documents: Map[String, DataFrame],
                     correlations: Seq[CorrelationSpec]): AnalyzeResult = {
     require(correlations.nonEmpty, "no correlations requested")
+    val hist = history(documents, correlations, "to")
+    val stats = statsOf(hist.withColumn("side", lit("to")))
+    val horizons = horizonsOf(correlations, stats, "to")
+    val specOverrides = targetSpecs(correlations, stats)
+    val forecast = Forecaster.forecast(hist, gridFor(correlations, hist, horizons),
+      specOverrides(correlations.head.id), "series", specOverrides)
+    val diag = Diagnostics.acfPacf(hist, "series").withColumn("side", lit("to"))
 
-    val hist = cacheOnce(correlations.map { c =>
-      val doc = documents.getOrElse(c.toData,
-        throw new IllegalArgumentException(s"unknown document: ${c.toData}"))
+    AnalyzeResult(forecast.limit(0), forecast, diag,
+                  forecast.sparkSession.emptyDataFrame, boundsOf(stats),
+                  fitBoundsOf(specOverrides),
+                  horizons.map { case (id, h) => id -> (h, h) },
+                  cachedFrames = Seq(hist))
+  }
+
+  /** T1-T3 + A1 for one side of every correlation ("from" = covariate,
+    * "to" = target): extract, bucket to the grain and aggregate, tagged
+    * with the correlation id, cached for the request. */
+  private def history(documents: Map[String, DataFrame], correlations: Seq[CorrelationSpec],
+                      side: String): DataFrame =
+    cacheOnce(correlations.map { c =>
+      val (docName, path) = if (side == "from") (c.fromData, c.fromIndex) else (c.toData, c.toIndex)
+      val doc = documents.getOrElse(docName,
+        throw new IllegalArgumentException(s"unknown document: $docName"))
       Aggregations.groupByTime(
-          extractSeries(doc, c.dateColumn, c.toIndex), c.grain.map(TimeOps.normalizeGrain),
+          extractSeries(doc, c.dateColumn, path), c.grain.map(TimeOps.normalizeGrain),
           c.aggregation)
         .select(lit(c.id).as("series"), col("ds"), col("y"))
     }.reduce(_ unionByName _))
 
-    val counts: Map[String, Int] =
-      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty
-      else hist.groupBy("series").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-    val horizons = correlations
-      .map(c => c.id -> c.unitsToForecast.getOrElse(counts.getOrElse(c.id, 1))).toMap
+  /** A2-A5 inputs of every (series, side) of `sides` — one aggregate,
+    * one job, a handful of rows. A series with no rows reads as
+    * `SeriesStats.Empty`. */
+  private def statsOf(sides: DataFrame): Map[(String, String), SeriesStats] =
+    Aggregations.seriesStats(sides, Seq("series", "side")).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> SeriesStats(r)).toMap
+      .withDefaultValue(SeriesStats.Empty)
 
-    val capStats: Map[String, (Double, Double, Double)] =
-      if (correlations.forall(_.growth == "linear")) Map.empty
-      else hist.groupBy("series")
-        .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
-        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-        .toMap
-    val specOverrides = correlations.map { c =>
-      val (mx, sd, mn) = capStats.getOrElse(c.id, (1.0, 0.0, 0.0))
-      val cap = math.max(c.ceiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx)
-      c.id -> c.fitSpec(math.min(c.floor, mn), cap)
+  private def horizonsOf(correlations: Seq[CorrelationSpec],
+                         stats: Map[(String, String), SeriesStats], side: String): Map[String, Int] =
+    correlations.map(c => c.id -> stats((c.id, side)).horizon(c.unitsToForecast)).toMap
+
+  /** Target-side fit specs with the logistic floor/cap (A3/A4) resolved
+    * from the target series itself. */
+  private def targetSpecs(correlations: Seq[CorrelationSpec],
+                          stats: Map[(String, String), SeriesStats]): Map[String, StructuralTS.FitSpec] =
+    correlations.map { c =>
+      val s = stats((c.id, "to"))
+      c.id -> c.fitSpec(s.floor(c.floor), s.cap(c.ceiling))
     }.toMap
 
-    val grainOf = correlations
-      .map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
-    val grid = grainOf.values.toSeq.distinct.map { g =>
-      val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
-      Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
+  private def boundsOf(stats: Map[(String, String), SeriesStats])
+      : Map[(String, String), (Timestamp, Timestamp)] =
+    stats.map { case (key, s) => key -> (s.minDs, s.maxDs) }
+
+  private def fitBoundsOf(specs: Map[String, StructuralTS.FitSpec]): Map[String, (Double, Double)] =
+    specs.map { case (id, s) => id -> (s.floor, s.cap) }
+
+  /** C6 future grids, one `futureGrid` per distinct grain (grains can
+    * differ per correlation). */
+  private def gridFor(correlations: Seq[CorrelationSpec], hist: DataFrame,
+                      horizons: Map[String, Int]): DataFrame =
+    correlations.groupBy(_.grain.map(TimeOps.normalizeGrain).getOrElse("D")).map { case (g, cs) =>
+      Forecaster.futureGrid(hist.filter(col("series").isin(cs.map(_.id): _*)), g,
                             horizon = 1, horizonOverrides = horizons)
     }.reduce(_ unionByName _)
-
-    val forecast = Forecaster.forecast(hist, grid,
-      specOverrides(correlations.head.id), "series", specOverrides)
-    val diag = Diagnostics.acfPacf(hist, "series").withColumn("side", lit("to"))
-    val bounds = hist.withColumn("side", lit("to"))
-      .groupBy("series", "side")
-      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
-
-    AnalyzeResult(forecast.limit(0), forecast, diag,
-                  forecast.sparkSession.emptyDataFrame, bounds,
-                  specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
-                  horizons.map { case (id, h) => id -> (h, h) },
-                  cachedFrames = Seq(hist))
-  }
 }

@@ -57,15 +57,16 @@ object HttpShell {
             // FastAPI status split: request-shaped failures are
             // pydantic 422s (`app.py:31-67`); anything else is a 500
             case e: Exception =>
+              // one-line detail; every other control character is escaped
               val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-                .replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ")
+                .replace('\n', ' ')
               val code = e match {
                 case _: IllegalArgumentException => 422 // bad spec/path/grain
                 case _: org.apache.spark.sql.AnalysisException => 422 // unparseable envelope
                 case _: NoSuchElementException => 422 // missing required field
                 case _ => 500
               }
-              (code, s"""{"detail": "$msg"}""")
+              (code, s"""{"detail": "${ResponseAssembly.esc(msg)}"}""")
           }
         val bytes = body.getBytes(UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")

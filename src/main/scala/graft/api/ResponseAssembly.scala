@@ -19,7 +19,7 @@ object ResponseAssembly {
     .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
   private def fmtTs(ts: java.sql.Timestamp): String = tsFmt.format(ts.toInstant)
 
-  private def esc(s: String): String =
+  private[api] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -38,28 +38,38 @@ object ResponseAssembly {
     rows.sortBy(_.getInt(1)).map(r => s""""${r.getInt(1)}": ${num(r.getDouble(valueIdx))}""")
       .mkString("{", ", ", "}")
 
-  /** One `Prediction` record: the full 13-column contract
-    * (`responses.py:20-33` — P3 rename map `app.py:336-352`). */
+  /** P3 rename map (`app.py:336-352`): forecast column → `Prediction`
+    * field (`responses.py:20-33`). */
+  private val predictionFields = Seq(
+    "yhat" -> "prediction", "yhat_lower" -> "prediction_lower_bound",
+    "yhat_upper" -> "prediction_upper_bound", "trend" -> "trend",
+    "trend_lower" -> "trend_lower_bound", "trend_upper" -> "trend_upper_bound",
+    "additive_terms" -> "additive_terms",
+    "additive_terms_lower" -> "additive_terms_lower",
+    "additive_terms_upper" -> "additive_terms_upper",
+    "multiplicative_terms" -> "multiplicative_terms",
+    "multiplicative_terms_lower" -> "multiplicative_terms_lower",
+    "multiplicative_terms_upper" -> "multiplicative_terms_upper")
+
+  /** One `Prediction` record: the date plus the 12 renamed columns. */
   private def forecastRow(r: Row): String = {
-    val cols = Seq("yhat" -> "prediction", "yhat_lower" -> "prediction_lower_bound",
-                   "yhat_upper" -> "prediction_upper_bound", "trend" -> "trend",
-                   "trend_lower" -> "trend_lower_bound", "trend_upper" -> "trend_upper_bound",
-                   "additive_terms" -> "additive_terms",
-                   "additive_terms_lower" -> "additive_terms_lower",
-                   "additive_terms_upper" -> "additive_terms_upper",
-                   "multiplicative_terms" -> "multiplicative_terms",
-                   "multiplicative_terms_lower" -> "multiplicative_terms_lower",
-                   "multiplicative_terms_upper" -> "multiplicative_terms_upper")
     val ds = fmtTs(r.getAs[java.sql.Timestamp]("ds"))
-    val vals = cols.map { case (src, dst) => s""""$dst": ${num(r.getAs[Double](src))}""" }
+    val vals = predictionFields.map { case (src, dst) => s""""$dst": ${num(r.getAs[Double](src))}""" }
     (s""""date": "$ds"""" +: vals).mkString("{", ", ", "}")
   }
 
-  private val forecastCols = Seq(
-    "series", "ds", "segment", "yhat", "yhat_lower", "yhat_upper",
-    "trend", "trend_lower", "trend_upper",
-    "additive_terms", "additive_terms_lower", "additive_terms_upper",
-    "multiplicative_terms", "multiplicative_terms_lower", "multiplicative_terms_upper")
+  /** Per series, the `historicalForecasts` and `futureForecasts` JSON
+    * arrays (F1/F2 `segment` split), each in date order. */
+  private def predictionArrays(result: AnalyzeResult): Map[String, (String, String)] =
+    result.targetForecasts
+      .select((Seq("series", "ds", "segment") ++ predictionFields.map(_._1)).map(col): _*)
+      .collect().groupBy(_.getString(0))
+      .map { case (id, rows) =>
+        val (hist, fut) = rows.sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
+          .partition(_.getString(2) == "historical")
+        id -> (hist.map(forecastRow).mkString("[", ", ", "]"),
+               fut.map(forecastRow).mkString("[", ", ", "]"))
+      }
 
   /** Build the full `/analyze`-shaped JSON response (`app.py:211-247`):
     * per correlation — `type`; `diagnostics` with the grain as `units`
@@ -86,22 +96,16 @@ object ResponseAssembly {
              servedContract: Boolean = false): String = {
     val specOf = specs.map(c => c.id -> c).toMap
     val diag = result.diagnostics.collect().groupBy(r => (r.getString(0), r.getString(4)))
-    val bounds = result.bounds.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
     val coefs = result.regressorCoefficients.collect().groupBy(_.getString(0))
     val grangerRows = result.granger
       .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
     val uniRows = result.univariate
       .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
-    val forecasts = result.targetForecasts
-      .select(forecastCols.map(col): _*)
-      .collect().groupBy(_.getString(0))
+    val predictions = predictionArrays(result)
 
-    val ids = forecasts.keySet ++ diag.keys.map(_._1)
+    val ids = predictions.keySet ++ diag.keys.map(_._1)
     val correlations = ids.toSeq.sorted.map { id =>
-      val fc = forecasts.getOrElse(id, Array.empty)
-      val hist = fc.filter(_.getString(2) == "historical").sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
-      val fut = fc.filter(_.getString(2) == "future").sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
+      val (hist, fut) = predictions.getOrElse(id, ("[]", "[]"))
       val spec = specOf.get(id)
       val (fromH, toH) = result.horizons.getOrElse(id, (0, 0))
       def sideJson(side: String): String = {
@@ -114,8 +118,8 @@ object ResponseAssembly {
           if (servedContract) idx.map(i => s""""index": "${esc(i)}", """).getOrElse("")
           else doc.map(d => s""""data": "${esc(d)}", "index": "${esc(idx.get)}", """)
             .getOrElse("")
-        bounds.get((id, side)).map { b =>
-          s"""{$names"minDate": "${fmtTs(b.getAs[java.sql.Timestamp]("min_ds"))}", "maxDate": "${fmtTs(b.getAs[java.sql.Timestamp]("max_ds"))}", "unitsForecasted": $h}"""
+        result.bounds.get((id, side)).map { case (lo, hi) =>
+          s"""{$names"minDate": "${fmtTs(lo)}", "maxDate": "${fmtTs(hi)}", "unitsForecasted": $h}"""
         }.getOrElse(s"{$names}")
       }
       def acfJson(side: String): String =
@@ -173,8 +177,8 @@ object ResponseAssembly {
          |    "from": ${sideJson("from")}, "to": ${sideJson("to")}},
          |$acfBlocks  "regressorCoefficients": $coefJson,
          |  "predictions": {
-         |    "historicalForecasts": ${hist.map(forecastRow).mkString("[", ", ", "]")},
-         |    "futureForecasts": ${fut.map(forecastRow).mkString("[", ", ", "]")}}
+         |    "historicalForecasts": $hist,
+         |    "futureForecasts": $fut}
          |}""".stripMargin
     }
     correlations.mkString("{\"correlations\": {", ", ", "}}")
@@ -189,29 +193,17 @@ object ResponseAssembly {
     * index), not the logistic floor/cap. */
   def toJsonSaturating(result: AnalyzeResult,
                        growthOf: Map[String, String]): String = {
-    val dateBounds = result.bounds.collect()
-      .filter(_.getString(1) == "to")
-      .map(r => r.getString(0) ->
-        (r.getAs[java.sql.Timestamp]("min_ds"), r.getAs[java.sql.Timestamp]("max_ds")))
-      .toMap
-    val forecasts = result.targetForecasts
-      .select(forecastCols.map(col): _*)
-      .collect().groupBy(_.getString(0))
-    val correlations = forecasts.keySet.toSeq.sorted.map { id =>
-      val fc = forecasts.getOrElse(id, Array.empty)
-      val hist = fc.filter(_.getString(2) == "historical")
-        .sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
-      val fut = fc.filter(_.getString(2) == "future")
-        .sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
+    val predictions = predictionArrays(result)
+    val correlations = predictions.toSeq.sortBy(_._1).map { case (id, (hist, fut)) =>
       val growth = growthOf.getOrElse(id, "linear")
-      val boundsJson = dateBounds.get(id).map { case (lo, hi) =>
+      val boundsJson = result.bounds.get((id, "to")).map { case (lo, hi) =>
         s""", "bounds": {"min": "${fmtTs(lo)}", "max": "${fmtTs(hi)}"}"""
       }.getOrElse("")
       s""""${esc(id)}": {
          |  "type": {"model": "prophet", "growth": "${esc(growth)}"$boundsJson},
          |  "predictions": {"description": "${esc(Explanations.predictions)}",
-         |    "historicalForecasts": ${hist.map(forecastRow).mkString("[", ", ", "]")},
-         |    "futureForecasts": ${fut.map(forecastRow).mkString("[", ", ", "]")}}
+         |    "historicalForecasts": $hist,
+         |    "futureForecasts": $fut}
          |}""".stripMargin
     }
     correlations.mkString("{\"correlations\": {", ", ", "}}")

@@ -1,6 +1,7 @@
 package graft.ts
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.Timestamp
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Aggregation ops A1-A5 (SURVEY §2.4).
@@ -8,7 +9,8 @@ import org.apache.spark.sql.functions._
   * Reference: `prepare_dataset` dedupes the time index with
   * `df.groupby("ds").agg({"y": agg})` (`app.py:89`, two-column variant
   * `app.py:390-395`); date bounds (`app.py:366-370`); logistic floor/cap
-  * defaults (`app.py:354-364`).
+  * defaults (`app.py:354-364`); horizon default (`app.py:91`). A2-A5 are
+  * one per-series aggregate, [[seriesStats]], read by [[SeriesStats]].
   *
   * Scale posture: [[groupByTime]] is a single hash-aggregate with map-side
   * partial aggregation — the only shuffle in the normalization pipeline,
@@ -46,30 +48,48 @@ object Aggregations {
     df.groupBy(keys: _*).agg(aggExpr(agg, col("y")).as("y"))
   }
 
-  /** A2: min/max of the time index, collected to the driver (two scalars —
-    * the only intentional driver materialization in the pipeline). */
-  def dateBounds(df: DataFrame, dsCol: String = "ds"): (java.sql.Timestamp, java.sql.Timestamp) = {
-    val r = df.agg(min(col(dsCol)).as("lo"), max(col(dsCol)).as("hi")).head()
-    (r.getTimestamp(0), r.getTimestamp(1))
+  /** A2-A5 inputs, one row per `keys` group of a (ds, y) history: the
+    * length `n`, the date bounds `min_ds`/`max_ds` (`app.py:366-370`) and
+    * `min_y`/`max_y`/`sd_y` (sample stddev, pandas `.std()`, ddof=1) for
+    * the logistic floor/cap. One grouped aggregate, so every series of a
+    * request costs one job; the rules that read it are [[SeriesStats]]'s. */
+  def seriesStats(hist: DataFrame, keys: Seq[String]): DataFrame =
+    hist.groupBy(keys.map(col): _*).agg(
+      count(lit(1)).as("n"), min("ds").as("min_ds"), max("ds").as("max_ds"),
+      min("y").as("min_y"), max("y").as("max_y"), stddev_samp("y").as("sd_y"))
+
+  /** One [[seriesStats]] row and the reference's per-series defaults
+    * derived from it (the bundle's cached properties, `app.py:354-370`). */
+  case class SeriesStats(n: Long, minDs: Timestamp, maxDs: Timestamp,
+                         minY: Double, maxY: Double, sdY: Double) {
+    /** A5: horizon default = post-aggregation series length (`app.py:91`;
+      * the bundle's raw-length variant at `app.py:333` is a documented
+      * divergence — we standardize on post-aggregation count). */
+    def horizon(unitsToForecast: Option[Int]): Int =
+      unitsToForecast.getOrElse(math.max(n, 1L).toInt)
+
+    /** A4: logistic-growth floor: `min(userFloor, min(y))`
+      * (`app.py:354-356`; user floor defaults to 0 via `Cap`,
+      * `app.py:253-255`). */
+    def floor(userFloor: Double): Double = math.min(userFloor, minY)
+
+    /** A3: logistic-growth ceiling:
+      * `max(userCap getOrElse max(y) + 3*stddev_samp(y), max(y))`
+      * (`app.py:358-364`). */
+    def cap(userCap: Option[Double]): Double = math.max(userCap.getOrElse(maxY + 3 * sdY), maxY)
   }
 
-  /** A3: logistic-growth ceiling default:
-    * `max(userCap getOrElse max(y) + 3*stddev_samp(y), max(y))`
-    * (`app.py:358-364`; pandas `.std()` is sample stddev, ddof=1). */
-  def ceilingExpr(y: Column, userCap: Option[Double]): Column = {
-    val default = userCap.map(lit).getOrElse(max(y) + lit(3.0) * stddev_samp(y))
-    greatest(default, max(y))
+  object SeriesStats {
+    /** A series with no rows: one-step horizon, floor/cap as if y = 0..1. */
+    val Empty: SeriesStats = SeriesStats(0L, null, null, minY = 0.0, maxY = 1.0, sdY = 0.0)
+
+    /** Read a [[seriesStats]] row. `stddev_samp` is NULL, not NaN, for a
+      * one-row series; its spread reads as 0. */
+    def apply(r: Row): SeriesStats = {
+      val sd = r.fieldIndex("sd_y")
+      SeriesStats(r.getAs[Long]("n"), r.getAs[Timestamp]("min_ds"), r.getAs[Timestamp]("max_ds"),
+                  r.getAs[Double]("min_y"), r.getAs[Double]("max_y"),
+                  if (r.isNullAt(sd)) 0.0 else r.getDouble(sd))
+    }
   }
-
-  /** A4: logistic-growth floor default: `min(userFloor, min(y))`
-    * (`app.py:354-356`; user floor defaults to 0 via `Cap`,
-    * `app.py:253-255`). */
-  def floorExpr(y: Column, userFloor: Double = 0.0): Column =
-    least(lit(userFloor), min(y))
-
-  /** A5: horizon default = post-aggregation series length (`app.py:91`;
-    * the bundle's raw-length variant at `app.py:333` is a documented
-    * divergence — we standardize on post-aggregation count). */
-  def defaultHorizon(df: DataFrame, horizon: Option[Int]): Long =
-    horizon.map(_.toLong).getOrElse(df.count())
 }

@@ -20,16 +20,15 @@ class HttpShellSpec extends AnyFunSuite {
                   .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
                 HttpResponse.BodyHandlers.ofString())
 
-  private val request = {
-    val rows = (1 to 20).map(d =>
-      s"""{"date": "2024-03-${f"$d%02d"}T00:00:00Z", "v": ${100.0 + 3 * d}}""")
-      .mkString("[", ",", "]")
+  private def requestOf(rows: String): String =
     s"""{"documents": {"m": {"description": null, "data": $rows}},
        |  "analyticsOptions": {"correlations": [{
        |    "id": "c1", "type": "prophet",
        |    "fromData": "m", "fromIndex": "v", "toData": "m", "toIndex": "v",
        |    "dataSetGranularity": "D", "unitsToForecast": 3}]}}""".stripMargin
-  }
+
+  private val request = requestOf((1 to 20).map(d =>
+    s"""{"date": "2024-03-${f"$d%02d"}T00:00:00Z", "v": ${100.0 + 3 * d}}""").mkString("[", ",", "]"))
 
   test("health + analyze + saturating single + 422 on garbage, over HTTP") {
     val server = HttpShell.start(spark, 0) // ephemeral port
@@ -115,6 +114,35 @@ class HttpShellSpec extends AnyFunSuite {
       assert(healthSec < 2.0,
              f"health probe took $healthSec%.1f s — requests look serialized")
       pool.shutdown()
+    } finally HttpShell.stop(server)
+  }
+
+  test("logistic single over a one-day series is a 200, like the linear request") {
+    // one daily bucket: its stddev_samp is NULL, which the logistic cap
+    // must read as no spread
+    val oneDay = (8 to 10).map(h =>
+      s"""{"date": "2024-03-01T${f"$h%02d"}:00:00Z", "v": ${100.0 + h}}""").mkString("[", ",", "]")
+    val body = requestOf(oneDay)
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      for (growth <- Seq("linear", "logistic")) {
+        val r = post(port, "/saturating-growth/single",
+          body.replace("\"unitsToForecast\": 3", s""""unitsToForecast": 3, "growth": "$growth""""))
+        assert(r.statusCode() == 200, s"$growth: ${r.body().take(300)}")
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body())
+      }
+    } finally HttpShell.stop(server)
+  }
+
+  test("a control character echoed into a 422 detail is escaped: the body is valid JSON") {
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val r = post(port, "/analyze", request.replace("\"fromIndex\": \"v\"", "\"fromIndex\": \"a\\tb\""))
+      assert(r.statusCode() == 422, r.body().take(300))
+      val detail = new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body()).get("detail")
+      assert(detail.asText.contains("a\tb"), detail.asText)
     } finally HttpShell.stop(server)
   }
 

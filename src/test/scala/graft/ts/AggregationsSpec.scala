@@ -42,32 +42,54 @@ class AggregationsSpec extends AnyFunSuite {
     assert(out == Map("a" -> 3.0, "b" -> 5.0))
   }
 
-  test("dateBounds returns min/max ds") {
-    val (lo, hi) = Aggregations.dateBounds(dup)
-    assert(lo == ts("2024-03-11 10:00:00") && hi == ts("2024-03-12 09:00:00"))
+  private def statsOf(df: org.apache.spark.sql.DataFrame): Aggregations.SeriesStats =
+    Aggregations.SeriesStats(Aggregations.seriesStats(df, Nil).head())
+
+  // the floor/cap rules read only y; the stats aggregate also bounds ds
+  private def ys(vs: Double*) =
+    vs.map(v => (ts("2024-03-11 00:00:00"), v)).toDF("ds", "y")
+
+  test("seriesStats date bounds = min/max ds") {
+    val s = statsOf(dup)
+    assert(s.minDs == ts("2024-03-11 10:00:00") && s.maxDs == ts("2024-03-12 09:00:00"))
   }
 
   test("ceiling default = max(y) + 3*stddev_samp, never below max(y)") {
-    val ys = Seq(1.0, 2.0, 3.0, 4.0).toDF("y")
-    val got = ys.agg(Aggregations.ceilingExpr($"y", None).as("c")).as[Double].head()
+    val s = statsOf(ys(1.0, 2.0, 3.0, 4.0))
     val mean = 2.5
     val sd = math.sqrt(Seq(1.0, 2.0, 3.0, 4.0).map(v => (v - mean) * (v - mean)).sum / 3)
-    assert(math.abs(got - (4.0 + 3 * sd)) < 1e-12)
+    assert(math.abs(s.cap(None) - (4.0 + 3 * sd)) < 1e-12)
     // user cap below max(y) is clamped up to max(y) (app.py:358-364)
-    val clamped = ys.agg(Aggregations.ceilingExpr($"y", Some(2.0)).as("c")).as[Double].head()
-    assert(clamped == 4.0)
+    assert(s.cap(Some(2.0)) == 4.0)
+  }
+
+  test("ceiling of a one-row series: NULL stddev_samp reads as 0, cap = max(y)") {
+    val s = statsOf(ys(7.0))
+    assert(s.n == 1 && s.sdY == 0.0)
+    assert(s.cap(None) == 7.0 && s.floor(0.0) == 0.0)
   }
 
   test("floor default = min(0, min(y))") {
-    val pos = Seq(1.0, 5.0).toDF("y")
-    assert(pos.agg(Aggregations.floorExpr($"y").as("f")).as[Double].head() == 0.0)
-    val neg = Seq(-2.0, 5.0).toDF("y")
-    assert(neg.agg(Aggregations.floorExpr($"y").as("f")).as[Double].head() == -2.0)
+    assert(statsOf(ys(1.0, 5.0)).floor(0.0) == 0.0)
+    assert(statsOf(ys(-2.0, 5.0)).floor(0.0) == -2.0)
   }
 
-  test("defaultHorizon = post-aggregation length when unset (app.py:91)") {
+  test("horizon default = post-aggregation length when unset (app.py:91)") {
     val agged = Aggregations.groupByTime(dup, Some("D"), "sum")
-    assert(Aggregations.defaultHorizon(agged, None) == 2L)
-    assert(Aggregations.defaultHorizon(agged, Some(14)) == 14L)
+    assert(statsOf(agged).horizon(None) == 2)
+    assert(statsOf(agged).horizon(Some(14)) == 14)
+  }
+
+  test("seriesStats is one row per key; a series with no rows keeps the fallbacks") {
+    val multi = Seq(("a", ts("2024-03-11 00:00:00"), 1.0), ("a", ts("2024-03-12 00:00:00"), 3.0),
+                    ("b", ts("2024-03-11 00:00:00"), 5.0)).toDF("sid", "ds", "y")
+    val byKey = Aggregations.seriesStats(multi, Seq("sid")).collect()
+      .map(r => r.getString(0) -> Aggregations.SeriesStats(r)).toMap
+    assert(byKey.keySet == Set("a", "b"))
+    assert(byKey("a").n == 2 && byKey("a").minY == 1.0 && byKey("a").maxY == 3.0)
+    assert(byKey("b").n == 1 && byKey("b").maxDs == ts("2024-03-11 00:00:00"))
+    val empty = Aggregations.SeriesStats.Empty
+    assert(empty.horizon(None) == 1 && empty.horizon(Some(4)) == 4)
+    assert(empty.floor(0.0) == 0.0 && empty.cap(None) == 1.0 && empty.cap(Some(9.0)) == 9.0)
   }
 }
